@@ -34,6 +34,20 @@ private[functions] object BpeMergeOps {
     false
   }
 
+  /** Symbol arrays must be `array<string>` with NON-nullable elements:
+    * [[toStrings]] has no null branch, so a nullable element type is
+    * rejected at analysis time rather than NPE-ing in an executor. The
+    * trainer's symbol columns ([[BpeTokens]], [[BpeFoldMerges]]) declare
+    * `containsNull = false`.
+    */
+  def checkSymbols(name: String, t: DataType): TypeCheckResult = t match {
+    case ArrayType(StringType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$name expects array<string> with non-null elements, got a nullable element type")
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"$name expects array<string>, got ${t.catalogString}")
+  }
+
   def toStrings(arr: ArrayData): Array[String] = {
     val n = arr.numElements()
     val out = new Array[String](n)
@@ -61,11 +75,8 @@ case class BpeFoldMerges(child: Expression, merges: Array[(String, String)])
 
   @transient private lazy val evaluator = new BpeFoldEval(merges)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_fold_merges expects array<string>, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    BpeMergeOps.checkSymbols("bpe_fold_merges", child.dataType)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -108,11 +119,8 @@ case class BpeMergeDeltas(child: Expression, prior: Array[(String, String)],
 
   @transient private lazy val evaluator = new BpeDeltaEval(prior, a, b)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge_deltas expects array<string>, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    BpeMergeOps.checkSymbols("bpe_merge_deltas", child.dataType)
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("a", StringType, nullable = false),

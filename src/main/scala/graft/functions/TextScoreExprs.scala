@@ -9,8 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native single-pass mirrors of [[graft.pipeline.TextOps.qualityScore]]
   * and [[graft.pipeline.TextOps.langIdHeuristic]].
   *
-  * The declarative `qualityScore` pays SIX regex executions plus three
-  * `split`s and an interpreted-lambda stopword filter per row, and
+  * The declarative `qualityScore` (the test-side `Declarative` oracle,
+  * mirrored by the SparkEntry oracle SQL) pays SIX regex executions plus
+  * three `split`s and an interpreted-lambda stopword filter per row, and
   * `langIdHeuristic`'s argmax fold re-evaluates every per-language filter
   * inside every `when` branch (up to 4x4 interpreted array traversals per
   * row). These expressions compute the IDENTICAL values in one traversal:
@@ -170,8 +171,8 @@ case class QualityScoreExpr(child: Expression) extends UnaryExpression with Code
     copy(child = newChild)
 }
 
-/** Native one-pass code-point n-gram array — mirrors LangId.gramsCol's
-  * declarative `when(length(t) >= n, transform(sequence(1, len-n+1),
+/** Native one-pass code-point n-gram array — mirrors the declarative
+  * `when(length(t) >= n, transform(sequence(1, len-n+1),
   * i => t.substr(i, n))).otherwise(array())` EXACTLY, including the
   * null-input → EMPTY ARRAY edge (the when-condition on a null length
   * falls to the otherwise branch). The declarative form is O(len²) per
@@ -239,7 +240,7 @@ case class LangIdHeuristicExpr(child: Expression) extends UnaryExpression with C
     else TypeCheckResult.TypeCheckFailure(
       s"langid_heuristic expects a string argument, got ${child.dataType.catalogString}")
 
-  // marker lists — MUST stay in lockstep with TextOps.markers
+  // marker lists — MUST stay in lockstep with the Declarative oracle's
   private val langs = Array("en", "de", "es", "fr")
   private val markers: Array[Array[String]] = Array(
     Array("the", "and", "of", "to", "is"),

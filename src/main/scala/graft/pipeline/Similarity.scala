@@ -11,20 +11,17 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Dot product: uses the native codegen'd `vec_dot` expression when the
-    * session was built with GraftExtensions; falls back to the pure-built-in
-    * higher-order-function formulation otherwise. For equal-length arrays
-    * with no null elements (every embedding column in this library) the two
-    * agree exactly — same left-to-right double accumulation. Degenerate
-    * inputs differ: the HOF path yields NULL on length mismatch or null
-    * elements, vec_dot truncates to the shorter array and counts null
-    * elements as 0 (see VecDot's doc).
+  /** Dot product via the native codegen'd [[graft.functions.VecDot]]
+    * expression, in every session. Degenerate inputs follow `vec_dot`:
+    * mismatched lengths truncate to the shorter array and null elements
+    * count as 0 (a NULL array yields NULL). For equal-length arrays with no
+    * null elements (every embedding column in this library) this equals the
+    * left-to-right double accumulation of the declarative
+    * `aggregate(zip_with(...))` formulation exactly.
     */
   def dot(a: Column, b: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (active.exists(_.catalog.functionExists("vec_dot"))) call_function("vec_dot", a, b)
-    else aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+    val bridge = org.apache.spark.sql.graft.GraftSqlBridge
+    bridge.column(graft.functions.VecDot(bridge.expression(a), bridge.expression(b)))
   }
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -151,25 +148,13 @@ object Similarity {
     * (k·dim literal nodes + a per-row k-struct array_sort) chokes the
     * analyzer and pays O(k log k) interpreted work per row. Needs no
     * session extension (carries non-literal state; constructed directly).
-    * Bit-identical to [[probeClustersBuiltin]] — pinned by
+    * Bit-identical to the declarative per-centroid formulation — pinned by
     * IvfProbeSpec.
     */
   def probeClusters(vec: Column, cents: Array[Array[Double]], nProbe: Int): Column = {
     val bridge = org.apache.spark.sql.graft.GraftSqlBridge
     bridge.column(graft.functions.IvfProbe(bridge.expression(vec),
       cents.flatten, cents.length, cents(0).length, nProbe))
-  }
-
-  /** Pure-built-in probe formulation (per-centroid dot products, array_sort
-    * on (−sim, idx) structs) — the parity oracle for [[probeClusters]];
-    * viable only at small centroid counts.
-    */
-  def probeClustersBuiltin(vec: Column, cents: Array[Array[Double]], nProbe: Int): Column = {
-    val entries = array(cents.zipWithIndex.map { case (c, i) =>
-      val sim = dot(vec, array(c.map(lit): _*))
-      struct((-sim).as("negsim"), lit(i).as("idx"))
-    }: _*)
-    transform(slice(array_sort(entries), 1, nProbe), e => e.getField("idx"))
   }
 
   /** IVF search: probe the `nProbe` centroids nearest to each query and do

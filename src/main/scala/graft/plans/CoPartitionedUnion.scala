@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Partitioning-preserving union of two schema-aligned, co-clustered
-  * frames (custom LogicalPlan + Strategy + SparkPlan, registered via
-  * GraftExtensions).
+  * frames (custom LogicalPlan + Strategy + SparkPlan; build it with
+  * [[CoPartitionedUnion.union]], which installs the strategy on the
+  * frames' session).
   *
   * Why it exists: Spark's `UnionExec` reports `UnknownPartitioning` even
   * when both children are hash-partitioned on the same key, so a window
@@ -80,9 +81,28 @@ object CoPartitionedUnionStrategy extends SparkStrategy {
 }
 
 object CoPartitionedUnion {
-  /** True when the session can plan CoPartitionedUnion (GraftExtensions). */
-  def available(spark: SparkSession): Boolean =
-    spark.sessionState.planner.strategies.exists(_ eq CoPartitionedUnionStrategy)
+  /** Co-partitioned union of two column-aligned frames clustered on
+    * `keyCol`. Installs [[CoPartitionedUnionStrategy]] into the left
+    * frame's session (idempotent), so the node plans in any session.
+    */
+  def union(left: DataFrame, right: DataFrame, keyCol: String): DataFrame = {
+    val spark = left.sparkSession
+    install(spark)
+    val lp = left.queryExecution.analyzed
+    val rp = right.queryExecution.analyzed
+    require(lp.output.map(_.name) == rp.output.map(_.name),
+      "co-partitioned union sides must be column-aligned")
+    org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark, CoPartitionedUnion(lp, rp,
+      lp.output.filter(_.name == keyCol), rp.output.filter(_.name == keyCol)))
+  }
+
+  private def install(spark: SparkSession): Unit = {
+    val ex = spark.experimental
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(CoPartitionedUnionStrategy))
+        ex.extraStrategies = ex.extraStrategies :+ CoPartitionedUnionStrategy
+    }
+  }
 
   /** Union-style output merge: left attributes (identity/exprIds preserved)
     * widened to `nullable` wherever the right side is nullable; positional

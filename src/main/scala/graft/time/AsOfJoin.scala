@@ -72,11 +72,6 @@ object AsOfJoin {
            rightPayload: Seq[String], prefix: String = "asof_",
            skewThreshold: Long = 2000000L, salts: Int = 8,
            numPartitions: Int = 0,
-           /** Test seam: force the built-in unionByName formulation even
-             * when CoPartitionedUnion is plannable (parity coverage for
-             * sessions without GraftExtensions).
-             */
-           forceBuiltinUnion: Boolean = false,
            /** Caller-supplied skew knowledge: `Some(keys)` salts exactly
              * those keys and SKIPS the detection scan; `Some(Nil)` asserts
              * "no skew" and also skips it. `None` (default) runs the
@@ -108,7 +103,6 @@ object AsOfJoin {
              * unlike `skewKeys` whose default scans.
              */
            rightSkewKeys: Option[Seq[String]] = Some(Nil)): DataFrame = {
-    val spark = left.sparkSession
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
     val fwd = direction == "forward"
@@ -200,14 +194,13 @@ object AsOfJoin {
     val w = Window.partitionBy(col("__k"), col("__salt"))
       .orderBy(if (fwd) col("__ts").desc else col("__ts").asc, col("__tag"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // union the tagged frames. With GraftExtensions, the custom
-    // CoPartitionedUnion keeps the left side's hash partitioning visible to
-    // the window (built-in UnionExec reports UnknownPartitioning, forcing a
-    // full reshuffle of base + summaries even when the left side — the big
-    // one — is already partitioned by the key, e.g. fresh out of the
-    // point-in-time window layer). EnsureRequirements still inserts the
-    // exchanges needed to make each side key-clustered, so semantics are
-    // identical either way.
+    // union the tagged frames. The custom CoPartitionedUnion keeps the left
+    // side's hash partitioning visible to the window (built-in UnionExec
+    // reports UnknownPartitioning, forcing a full reshuffle of base +
+    // summaries even when the left side — the big one — is already
+    // partitioned by the key, e.g. fresh out of the point-in-time window
+    // layer). EnsureRequirements still inserts the exchanges needed to make
+    // each side key-clustered, so semantics are identical either way.
     //
     // Skewed keys force the BUILT-IN union: salting only helps if the
     // window's ClusteredDistribution(__k, __salt) actually materializes as a
@@ -220,16 +213,9 @@ object AsOfJoin {
     // shuffle-elimination fast path and the skew path are mutually
     // exclusive by construction.
     val unioned: DataFrame =
-      if (!forceBuiltinUnion && skewedKeys.isEmpty && rightHeavy.isEmpty &&
-          graft.plans.CoPartitionedUnion.available(spark)) {
-        val lp = lFrame.queryExecution.analyzed
-        val rp = rFrame.queryExecution.analyzed
-        require(lp.output.map(_.name) == rp.output.map(_.name),
-          "as-of union sides must be column-aligned")
-        org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
-          graft.plans.CoPartitionedUnion(lp, rp,
-            lp.output.filter(_.name == "__k"), rp.output.filter(_.name == "__k")))
-      } else lFrame.unionByName(rFrame)
+      if (skewedKeys.isEmpty && rightHeavy.isEmpty)
+        graft.plans.CoPartitionedUnion.union(lFrame, rFrame, "__k")
+      else lFrame.unionByName(rFrame)
 
     // the payload struct is null on left rows, so last(ignoreNulls=true)
     // carries the latest RIGHT payload forward into each left row; the

@@ -91,25 +91,15 @@ object BenchExtra {
         col("__label").cast("string").as("lang"))
         .filter(col("t").isNotNull && col("lang").isNotNull)
       val n = 2
-      val gramsCol = when(length(col("t")) >= n,
-        transform(sequence(lit(1), length(col("t")) - (n - 1)),
-          i => col("t").substr(i, lit(n))))
-        .otherwise(array().cast("array<string>"))
-      bench("nb_stage_gram_explode_agg") {
-        noop(d.select(col("lang"), explode(gramsCol).as("gram"))
-          .groupBy("lang", "gram").agg(count(lit(1)).as("c")))
-      }
       bench("nb_stage_label_scan_only") {
         noop(d)
       }
       // native char_ngrams formulation — what LangId.train's gramsCol
-      // actually dispatches to under GraftExtensions. The declarative
-      // probe above is the O(len²) FALLBACK, not the trained path: the
-      // real stage cost is ~0.33 s, not ~1.0 s. A packed-code-point-long
-      // gram key variant was built, measured at 0.324 s vs this probe's
-      // 0.335 s (explode machinery dominates, not key width), and
-      // REVERTED — no measured win to justify re-keying three
-      // oracle-replayed NB trainers.
+      // builds (stage cost ~0.33 s). A packed-code-point-long gram key
+      // variant was built, measured at 0.324 s vs this probe's 0.335 s
+      // (explode machinery dominates, not key width), and REVERTED — no
+      // measured win to justify re-keying three oracle-replayed NB
+      // trainers.
       val bridge = org.apache.spark.sql.graft.GraftSqlBridge
       val ng = bridge.column(graft.functions.CharNgrams(
         bridge.expression(col("t")), n))

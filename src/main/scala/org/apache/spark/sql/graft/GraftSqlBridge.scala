@@ -21,4 +21,10 @@ object GraftSqlBridge {
 
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** A native expression built over one column's expression, as a Column. */
+  def native(c: org.apache.spark.sql.Column)(
+      build: org.apache.spark.sql.catalyst.expressions.Expression => org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.Column =
+    column(build(expression(c)))
 }

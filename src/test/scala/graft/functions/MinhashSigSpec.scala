@@ -13,8 +13,7 @@ class MinhashSigSpec extends SparkSpec {
     val texts = Seq.fill(300)(Seq.fill(2 + rng.nextInt(40))(words(rng.nextInt(words.size))).mkString(" ")) ++
       Seq("", " ", "one", "one two", "Tabs\tand  multiple   spaces", "MIXED case TEXT here")
     val df = texts.toDF("text")
-    val declarative = Dedup.minhashFromBases(
-      transform(Dedup.wordNgrams(col("text"), 3), s => Dedup.baseHash(s)), 8)
+    val declarative = Declarative.minhashSignature(col("text"), 8, 3)
     val cmp = df.select(
       call_function("minhash_signature", col("text"), lit(8), lit(3)).as("fast"),
       declarative.as("slow"))

@@ -9,21 +9,6 @@ import org.apache.spark.sql.functions._
 class RepetitionExprsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** HOF formulations copied from TextOps' fallback branches. */
-  private def hofDupLine(text: org.apache.spark.sql.Column) = {
-    val lines = filter(transform(split(text, "\n"), l => trim(l)), l => length(l) > 0)
-    when(size(lines) <= 0, lit(0.0)).otherwise(
-      (size(lines) - size(array_distinct(lines))).cast("double") /
-        size(lines).cast("double"))
-  }
-  private def hofTopWord(text: org.apache.spark.sql.Column) = {
-    val toks = filter(split(trim(lower(text)), "\\s+"), t => length(t) > 0)
-    when(size(toks) <= 0, lit(0.0)).otherwise(
-      array_max(transform(array_distinct(toks),
-        w => size(filter(toks, t => t === w)))).cast("double") /
-        size(toks).cast("double"))
-  }
-
   private val docs = Seq(
     "nav\ncontent one\nnav\ncontent two\nnav",        // repeated chrome lines
     "a\n\n\n a \n  a\nb",                             // blank lines + space-trim dups
@@ -40,14 +25,14 @@ class RepetitionExprsSpec extends SparkSpec {
   test("dup_line_ratio matches the HOF formulation bit-for-bit") {
     val cmp = docs.select(
       call_function("dup_line_ratio", col("text")).as("fast"),
-      hofDupLine(col("text")).as("slow"))
+      Declarative.dupLineRatio(col("text")).as("slow"))
     assert(cmp.filter(not(col("fast") <=> col("slow"))).count() === 0)
   }
 
   test("top_word_ratio matches the HOF formulation bit-for-bit") {
     val cmp = docs.select(
       call_function("top_word_ratio", col("text")).as("fast"),
-      hofTopWord(col("text")).as("slow"))
+      Declarative.topWordRatio(col("text")).as("slow"))
     assert(cmp.filter(not(col("fast") <=> col("slow"))).count() === 0)
   }
 
@@ -63,8 +48,8 @@ class RepetitionExprsSpec extends SparkSpec {
     val nn = Seq[Option[String]](None).toDF("text").select(
       call_function("dup_line_ratio", col("text")).as("d"),
       call_function("top_word_ratio", col("text")).as("t"),
-      hofDupLine(col("text")).as("hd"),
-      hofTopWord(col("text")).as("ht")).collect()(0)
+      Declarative.dupLineRatio(col("text")).as("hd"),
+      Declarative.topWordRatio(col("text")).as("ht")).collect()(0)
     assert(nn.isNullAt(0) && nn.isNullAt(1) && nn.isNullAt(2) && nn.isNullAt(3))
   }
 
@@ -72,9 +57,9 @@ class RepetitionExprsSpec extends SparkSpec {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val cmp = d.select(
       call_function("dup_line_ratio", col("text")).as("fd"),
-      hofDupLine(col("text")).as("sd"),
+      Declarative.dupLineRatio(col("text")).as("sd"),
       call_function("top_word_ratio", col("text")).as("ft"),
-      hofTopWord(col("text")).as("st"))
+      Declarative.topWordRatio(col("text")).as("st"))
     assert(cmp.filter(not(col("fd") <=> col("sd")) || not(col("ft") <=> col("st"))).count() === 0)
   }
 }

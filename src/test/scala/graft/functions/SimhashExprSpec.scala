@@ -9,18 +9,6 @@ import org.apache.spark.sql.functions._
 class SimhashExprSpec extends SparkSpec {
   import spark.implicits._
 
-  /** The HOF formulation copied from Dedup.simhash's fallback branch. */
-  private def hofSimhash(text: org.apache.spark.sql.Column, bits: Int) = {
-    val tokenHashes = transform(
-      split(trim(lower(text)), "\\s+"),
-      t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-    (0 until bits).map { b =>
-      val bitSum = aggregate(tokenHashes, lit(0L),
-        (acc, th) => acc + when(shiftright(th, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   test("simhash matches the higher-order-function formulation bit-for-bit") {
     val docs = Seq(
       "The quick brown fox jumps over the lazy dog",
@@ -33,7 +21,7 @@ class SimhashExprSpec extends SparkSpec {
     ).toDF("text")
     val cmp = docs.select(
       call_function("simhash", col("text"), lit(32)).as("fast"),
-      hofSimhash(col("text"), 32).as("slow"))
+      Declarative.simhash(col("text"), 32).as("slow"))
     assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
     // null text -> null hash
     val n = Seq[Option[String]](None, Some("x")).toDF("text")

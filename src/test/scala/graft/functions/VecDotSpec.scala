@@ -6,10 +6,6 @@ import org.apache.spark.sql.functions._
 class VecDotSpec extends SparkSpec {
   import spark.implicits._
 
-  private def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   test("vec_dot matches the higher-order-function formulation bit-for-bit") {
     val rng = new scala.util.Random(17)
     val rows = Seq.fill(500)((
@@ -18,7 +14,7 @@ class VecDotSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
     val cmp = df.select(
       call_function("vec_dot", col("a"), col("b")).as("fast"),
-      hofDot(col("a"), col("b")).as("slow"))
+      Declarative.dot(col("a"), col("b")).as("slow"))
     // identical left-to-right double accumulation => exact equality
     assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
     assert(cmp.filter(col("fast").isNull).count() === 0)

@@ -2,17 +2,9 @@ package graft.plans
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftSqlBridge
 
 class CoPartitionedUnionSpec extends SparkSpec {
   import spark.implicits._
-
-  private def union2(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) = {
-    val lp = l.queryExecution.analyzed
-    val rp = r.queryExecution.analyzed
-    GraftSqlBridge.ofRows(spark, CoPartitionedUnion(lp, rp,
-      lp.output.filter(_.name == "k"), rp.output.filter(_.name == "k")))
-  }
 
   test("output nullability is the per-position OR of both sides") {
     // left: non-nullable literal column; right: genuinely null values there
@@ -20,7 +12,7 @@ class CoPartitionedUnionSpec extends SparkSpec {
     val r = Seq(("b", 2)).toDF("k", "i").select(col("k"), col("i"),
       lit(null).cast("double").as("v"))
     assert(!l.schema("v").nullable && r.schema("v").nullable)
-    val u = union2(l, r)
+    val u = CoPartitionedUnion.union(l, r, "k")
     // misdeclared non-nullable v would let codegen read the right row's v
     // without a null check and fabricate a value
     assert(u.schema("v").nullable, "right-side nullability not merged into output")
@@ -31,7 +23,7 @@ class CoPartitionedUnionSpec extends SparkSpec {
   test("positional dataType mismatch is rejected at construction") {
     val l = Seq(("a", 1.0)).toDF("k", "v")
     val r = Seq(("b", 2)).toDF("k", "v") // v: int vs double
-    val e = intercept[IllegalArgumentException] { union2(l, r).collect() }
+    val e = intercept[IllegalArgumentException] { CoPartitionedUnion.union(l, r, "k").collect() }
     assert(e.getMessage.contains("type mismatch"), e.getMessage)
   }
 }

@@ -179,18 +179,21 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("CoPartitionedUnion and built-in union formulations agree exactly") {
-    // TestSpark carries GraftExtensions, so the default path plans the
-    // custom union; the forced built-in path covers extension-less sessions
+    // the default path plans the custom union; salting every key ships the
+    // built-in union (the skew rule), with identical results
     val rng = new scala.util.Random(11)
     val left = (0 until 600).map(_ =>
       (s"k${rng.nextInt(9)}", ts(rng.nextInt(50000).toLong))).toDF("k", "ts")
     val right = (0 until 150).map(i =>
       (s"k${rng.nextInt(9)}", ts(rng.nextInt(50000).toLong), i.toDouble)).toDF("k", "ts", "v")
     val fast = AsOfJoin.asof(left, right, "k", "ts", Seq("v"))
-    val slow = AsOfJoin.asof(left, right, "k", "ts", Seq("v"), forceBuiltinUnion = true)
+    val allKeys = (0 until 9).map(i => s"k$i")
+    val slow = AsOfJoin.asof(left, right, "k", "ts", Seq("v"), skewKeys = Some(allKeys))
     assert(fast.exceptAll(slow).count() == 0 && slow.exceptAll(fast).count() == 0)
-    // and the custom node is actually in the default plan
+    // and the custom node is in the default plan only
     val planStr = fast.queryExecution.executedPlan.toString
     assert(planStr.contains("CoPartitionedUnion"), "custom union not planned")
+    assert(!slow.queryExecution.executedPlan.toString.contains("CoPartitionedUnion"),
+      "salted path must ship the built-in union")
   }
 }
